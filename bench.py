@@ -134,13 +134,14 @@ def main() -> None:
         # `cpus` is the PHYSICAL width (os.cpu_count()) — kept for
         # continuity with r11-r13 artifacts. The next two fields are
         # what the bench actually RAN with: the requested local-mode
-        # width ($SPARK_GRAFT_CPUS → local[n], session.py) and the
+        # width ($SPARK_GRAFT_CPUS → local[n], session.py), kept as
+        # the raw string because local[*] is a valid request, and the
         # live context's defaultParallelism — so a low-core scaling
         # run is self-proving from the artifact (r13 verdict item 2:
         # the driver's 8-core probe read as suspect_cpus_ignored
         # because both artifacts recorded the physical 32).
         "cpus": os.cpu_count(),
-        "cpus_requested": int(_default_cpus()),
+        "cpus_requested": _default_cpus(),
         "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     payload = {

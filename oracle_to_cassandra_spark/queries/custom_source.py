@@ -173,9 +173,7 @@ def stream_custom_pysource_aggregate(spark, sf_dir):
     # default trigger, not availableNow: the reader reveals its
     # backlog one micro-batch at a time (like a real queue cursor),
     # and availableNow would snapshot only the first batch
-    return run_stream_to_memory(
-        agg, output_mode="complete", available_now=False, state_partitions=8
-    )
+    return run_stream_to_memory(agg, output_mode="complete", available_now=False)
 
 
 @query(

@@ -12,10 +12,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from oracle_to_cassandra_spark.registry import query
+from oracle_to_cassandra_spark.session import scoped_conf
 from oracle_to_cassandra_spark.streaming import (
-    JOIN_STATE_PARTITIONS,
-    pandas_state_partitions,
     read_events_stream,
+    run_stream,
     run_stream_to_memory,
 )
 
@@ -273,17 +273,16 @@ def stream_stream_interval_join(spark, sf_dir):
             "purchase_value_c"
         ),
     )
-    # width: JOIN_STATE_PARTITIONS (4 state stores per partition — see
-    # streaming/core.py); no_data_batches=False: an INNER interval
-    # join emits only on data batches — the trailing no-data batch
-    # exists to evict join state, moot when the query stops at
-    # exhaustion. Rows probed identical with/without it (r14); the
-    # left-outer twin below KEEPS no-data batches (its null padding is
-    # emitted by exactly that watermark-driven eviction pass).
+    # no_data_batches=False: an INNER interval join emits only on data
+    # batches — the trailing no-data batch exists to evict join state,
+    # moot when the query stops at exhaustion. Rows probed identical
+    # with/without it; the left-outer twin below KEEPS no-data batches
+    # (its null padding is emitted by exactly that watermark-driven
+    # eviction pass).
     return run_stream_to_memory(
         joined,
         output_mode="append",
-        state_partitions=JOIN_STATE_PARTITIONS,
+        family="join",
         expect_single_batch=True,
         no_data_batches=False,
     )
@@ -415,7 +414,7 @@ def stream_stream_left_outer_interval_join(spark, sf_dir):
     return run_stream_to_memory(
         joined,
         output_mode="append",
-        state_partitions=JOIN_STATE_PARTITIONS,
+        family="join",
         expect_single_batch=True,
     )
 
@@ -448,11 +447,10 @@ def stream_stateful_user_profile(spark, sf_dir):
     from oracle_to_cassandra_spark.streaming.stateful import user_profile_stream
 
     ev = read_events_stream(spark, sf_dir)
-    # Python-stateful: width = compute parallelism (streaming/core.py)
     out = run_stream_to_memory(
         user_profile_stream(ev),
         output_mode="update",
-        state_partitions=pandas_state_partitions(spark),
+        family="python",
     )
     return (
         out.groupBy("user_id")
@@ -509,18 +507,14 @@ def stream_ingest_sink_roundtrip(spark, sf_dir):
     def write_batch(batch_df, batch_id):
         batch_df.write.mode("append").partitionBy("event_type").parquet(out_dir)
 
-    q = (
+    run_stream(
+        spark,
         ev.writeStream.outputMode("append")
         .foreachBatch(write_batch)
         .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
+        .option("checkpointLocation", ckpt),
+        family=None,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
 
     return (
         read_partition(
@@ -574,7 +568,7 @@ def stream_tws_user_activity(spark, sf_dir):
     out = run_stream_to_memory(
         user_activity_tws_stream(ev),
         output_mode="update",
-        state_partitions=pandas_state_partitions(spark),
+        family="python",
     )
     return out.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -857,31 +851,21 @@ def stream_rocksdb_state_aggregate(spark, sf_dir):
     to the checkpoint location, where the default provider holds
     every key in executor heap. Identical results to the closed-form
     oracle prove the backend swap is semantics-free; the provider is
-    scoped to this query's start and restored afterwards (a streaming
-    query pins its provider at first start, so the conf round-trip
-    cannot leak into sibling streams)."""
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.HDFSBackedStateStoreProvider",
+    scoped to this query's run (a streaming query pins its provider
+    at first start, so the scope cannot leak into sibling streams)."""
+    ev = read_events_stream(spark, sf_dir)
+    agg = ev.groupBy("event_type").agg(
+        F.count("*").alias("n_events"),
+        F.sum(F.round(F.col("value") * 1000000).cast("long")).alias(
+            "value_micro"
+        ),
     )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming."
-        "state.RocksDBStateStoreProvider",
-    )
-    try:
-        ev = read_events_stream(spark, sf_dir)
-        agg = ev.groupBy("event_type").agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value") * 1000000).cast("long")).alias(
-                "value_micro"
-            ),
-        )
-        return run_stream_to_memory(agg, output_mode="complete",
-                                    state_partitions=8)
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": "org.apache.spark.sql."
+        "execution.streaming.state.RocksDBStateStoreProvider"
+    }
+    with scoped_conf(spark, rocksdb):
+        return run_stream_to_memory(agg, output_mode="complete")
 
 
 def _session_expiry_oracle() -> str:
@@ -971,7 +955,7 @@ def stream_session_expiry_timers(spark, sf_dir):
     return run_stream_to_memory(
         session_expiry_stream(ev),
         output_mode="append",
-        state_partitions=pandas_state_partitions(spark),
+        family="python",
         expect_single_batch=True,
     )
 
@@ -1088,7 +1072,7 @@ def stream_tws_checkpoint_resume(spark, sf_dir):
             ckpt,
             on_batch=on_batch,
             output_mode="update",
-            state_partitions=pandas_state_partitions(spark),
+            family="python",
         )
 
     if state["armed"]:

@@ -13,7 +13,8 @@ wide-partition table designed per access path:
 
 Spark mapping: partition key → ``write.partitionBy`` (partition-filter
 pruning on read-back = the CQL point lookup); clustering column →
-``sortWithinPartitions`` before the write; static column → the value
+``sortWithinPartitions(partition key, clustering columns)`` before the
+write; static column → the value
 denormalized onto every row by the build-time join (exactly what
 README.md:931 produces). When a real Cassandra cluster is available
 the same DataFrame goes through the spark-cassandra connector instead
@@ -68,11 +69,17 @@ def write_query_table(
 ) -> None:
     """S8 analog (README.md:839,967): save a denormalized DataFrame as
     a query-first table — partitioned by the partition key, rows sorted
-    by the clustering columns within each partition."""
+    by the clustering columns within each partition.
+
+    The sort leads with the partition key: the planned write needs its
+    input ordered by the partition columns, and when they do not lead
+    the existing order it adds its own sort on them alone, under which
+    the clustering sort is dropped — every file then keeps whatever
+    order its rows arrived in."""
     validate_sink_columns(df, expected_columns)
     out = df.repartition(*[F.col(c) for c in partition_by])
     if cluster_by:
-        out = out.sortWithinPartitions(*cluster_by)
+        out = out.sortWithinPartitions(*partition_by, *cluster_by)
     out.write.mode(mode).partitionBy(*partition_by).parquet(path)
 
 

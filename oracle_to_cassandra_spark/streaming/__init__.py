@@ -1,6 +1,6 @@
 from oracle_to_cassandra_spark.streaming.core import (  # noqa: F401
-    JOIN_STATE_PARTITIONS,
-    pandas_state_partitions,
     read_events_stream,
+    run_stream,
     run_stream_to_memory,
+    state_width,
 )

@@ -18,79 +18,64 @@ import uuid
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from oracle_to_cassandra_spark.session import scoped_conf
+from oracle_to_cassandra_spark.sources.parquet import _read_events
 
 #: memory-sink temp views created by run_stream_to_memory, oldest
-#: first — retired lazily on the next call (see there for the bound)
-#: retired-view ledger: (session_token, weakref-to-wrapper, view_name).
-#: Scoped per underlying session because temp views ARE per-session —
-#: dropping a name against a different live session is a silent no-op
-#: and the real view (plus its pinned memory-sink result) would leak
-#: for the session lifetime (r11 ADVICE item 2). Ownership compares
-#: the JVM ``sessionUUID`` token, not Python wrapper identity: two
-#: distinct Python SparkSession wrappers over the same underlying
-#: session (e.g. a re-constructed ``SparkSession(sc)``) must see each
-#: other's views as their own (r12 ADVICE item 1). Entries whose
-#: wrapper is garbage-collected AND whose token differs from the
-#: caller's are pruned lazily — we can no longer reach that session
-#: to drop anything, and if it died its views died with it.
+#: first, as (session_token, weakref-to-wrapper, view_name) — retired
+#: lazily on the next call (see there for the bound). Scoped per
+#: underlying session because temp views ARE per-session: dropping a
+#: name against a different live session is a silent no-op, and the
+#: real view (plus its pinned memory-sink result) would leak for the
+#: session lifetime. Ownership compares the JVM ``sessionUUID`` token,
+#: not Python wrapper identity: two Python SparkSession wrappers over
+#: the same underlying session (e.g. a re-constructed
+#: ``SparkSession(sc)``) must see each other's views as their own.
+#: Entries whose wrapper is garbage-collected AND whose token differs
+#: from the caller's are pruned lazily — that session can no longer be
+#: reached to drop anything, and if it died its views died with it.
 _SINK_VIEWS: list[tuple[str, "weakref.ref", str]] = []
 
-#: default state-partition width for streams that do not size their
-#: own. A streaming query PINS its state-partition count at first
-#: start — it is a property of the checkpoint, not of the session —
-#: so the right width is set by expected state SIZE, never by the
-#: batch-shuffle default (guide §2: partitioning derived from the
-#: data, not a constant tuned for one deployment). Every stateful
-#: operator here opens one state store per partition and commits one
-#: delta file per partition per micro-batch; running test-SF state
-#: (thousands of keys) at the 32-wide batch default quadruples that
-#: fixed cost for nothing. Production overrides at submit time via
-#: ``SPARK_GRAFT_STATE_PARTITIONS`` sized to peak keyed state.
-DEFAULT_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STATE_PARTITIONS", "8")
-)
-
-#: state width for STREAM-STREAM JOINS, which open FOUR state stores
-#: per partition (two sides × two stores each: keyToNumValues +
-#: keyWithIndexToValue) — so for equal state volume the store-lifecycle
-#: fixed cost per micro-batch is 4× an aggregation's at the same
-#: width. The join buffers are bounded at O(rate × (delay + range))
-#: rows regardless of width (width is layout, not semantics), and the
-#: per-batch join work is JVM-side (no Python compute to parallelize),
-#: so a narrower width strictly wins until a single partition's buffer
-#: skews: measured 8 → 4 at sf0.1 cut both interval joins ~20-25% on
-#: BOTH local[32] and local[8] (r14). Production sizes by peak buffer
-#: volume via the env override.
-JOIN_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_JOIN_STATE_PARTITIONS", "4")
-)
-
-#: cap for the derived Python-stateful width below — past this the
-#: per-partition state-store open/commit fixed cost outgrows the
-#: added Python parallelism (measured flat 12→16 at local[32], r14)
-_PANDAS_STATE_CAP = 16
+#: state-partition width per stateful operator family. A streaming
+#: query pins its state-partition count in the checkpoint at first
+#: start, so the width is set by expected state size and per-batch
+#: work, never by the session's batch-shuffle default. Every stateful
+#: operator opens state stores per partition and commits one delta
+#: file per store per micro-batch; at test-SF state (thousands of
+#: keys) that store lifecycle is the fixed cost a wider layout
+#: multiplies. Production pins the width at submit time via
+#: ``SPARK_GRAFT_STATE_PARTITIONS``, sized to peak keyed state.
+_STATE_WIDTH = {
+    # JVM aggregates and dedup: one store per partition, store fixed
+    # cost dominates the per-batch work
+    "aggregate": lambda spark: 8,
+    # stream-stream joins open FOUR stores per partition (two sides ×
+    # keyToNumValues + keyWithIndexToValue), so at equal state volume
+    # their fixed cost per micro-batch is 4× an aggregate's. Their
+    # buffers hold O(rate × (delay + range)) rows whatever the width,
+    # and the join work is JVM-side, so narrower wins until one
+    # partition's buffer skews: 8 → 4 cut both sf0.1 interval joins
+    # ~20-25% on 32 and on 8 cores alike
+    "join": lambda spark: 4,
+    # applyInPandasWithState / transformWithStateInPandas: the keyed
+    # work runs in Python workers, so the width is compute parallelism
+    # — one partition per core, which ``defaultParallelism`` carries
+    # on local mode and a cluster alike — capped at 16, where store
+    # fixed cost overtakes the gain (sf0.1: 32 cores prefer 12-16 over
+    # 8 and are flat from 12 to 16; 8 cores prefer 8 over 12-16)
+    "python": lambda spark: min(16, spark.sparkContext.defaultParallelism),
+}
 
 
-def pandas_state_partitions(spark: SparkSession) -> int:
-    """State width for PYTHON-stateful operators
-    (``applyInPandasWithState`` / ``transformWithStateInPandas``).
-
-    Unlike JVM stateful operators (state-store fixed cost dominated —
-    see ``JOIN_STATE_PARTITIONS``), the per-batch keyed work here runs
-    in Python workers, so the width is COMPUTE parallelism first: one
-    partition per available core, capped where store fixed cost
-    overtakes the gain. Measured at sf0.1 (r14): local[32] prefers
-    12-16 over 8 (session timers 3.08 → 2.48 s, profile 1.56 → 1.18),
-    local[8] prefers 8 over 12-16 — i.e. the right width tracks the
-    core count, which ``defaultParallelism`` carries on local mode and
-    a cluster alike. Production overrides by keyspace via
-    ``SPARK_GRAFT_PANDAS_STATE_PARTITIONS``."""
-    env = os.environ.get("SPARK_GRAFT_PANDAS_STATE_PARTITIONS")
-    if env:
-        return int(env)
-    return min(_PANDAS_STATE_CAP, spark.sparkContext.defaultParallelism)
+def state_width(spark: SparkSession, family: str) -> int:
+    """State-partition width for a stream whose stateful operators are
+    of ``family`` (``"aggregate"``, ``"join"`` or ``"python"``);
+    ``SPARK_GRAFT_STATE_PARTITIONS``, when set, pins every family."""
+    width = _STATE_WIDTH[family]
+    pinned = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
+    return int(pinned) if pinned else width(spark)
 
 
 def _session_token(spark: SparkSession) -> str:
@@ -103,41 +88,12 @@ def _session_token(spark: SparkSession) -> str:
     except Exception:
         return f"py-id-{id(spark)}"
 
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``readStream`` over the events parquet — the file-source analog
-    of a Kafka topic; schema must be declared (no streaming inference).
-
-    The declared schema is taken from a batch read of the SAME files so
-    the stream reads whatever physical type the testdata generation
-    shipped (int64 nanos under ``nanosAsLong``, or native
-    timestamp[us]); ``ts`` is then normalized to TimestampType with the
-    same dispatch as ``sources.parquet.load_table``. Declaring a stale
-    Long schema against timestamp[us] files would silently reinterpret
-    the microsecond int64 and land every event in 1970 — deriving the
-    schema from the files makes that class of drift impossible.
-    """
-    # guarded set, same convention as sources.parquet.load_table:
-    # no reader mutates session state it doesn't need to change
-    if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    from oracle_to_cassandra_spark.sources.parquet import read_parquet
-
-    raw_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    # the file stream source lists a DIRECTORY (a Kafka-topic analog);
-    # pathGlobFilter narrows it to the events table
-    raw = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    ts_type = raw_schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        return raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-        )
-    if not isinstance(ts_type, T.TimestampType):
-        raw = raw.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return raw
+    """``readStream`` over the events parquet, ``ts`` normalized to
+    TimestampType exactly as the batch ``load_table("events")`` does
+    (``sources.parquet._read_events``)."""
+    return _read_events(spark, sf_dir, stream=True)
 
 
 def _retire_sink_views(spark: SparkSession, name: str) -> None:
@@ -159,25 +115,51 @@ def _retire_sink_views(spark: SparkSession, name: str) -> None:
     _SINK_VIEWS.append((token, weakref.ref(spark), name))
 
 
+def run_stream(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    family: str | None,
+    no_data_batches: bool = True,
+) -> StreamingQuery:
+    """Start ``writer``, drain it with ``processAllAvailable`` and stop
+    it; returns the stopped query, whose ``recentProgress`` stays
+    readable. Every stream the engine runs goes through here.
+
+    ``family`` names the stream's stateful operators and sets its
+    state width (``state_width``); ``None`` is for stateless streams,
+    which keep the session's width. ``no_data_batches=False`` drops
+    the trailing no-data micro-batch (see ``run_stream_to_memory``).
+
+    Both confs are scoped to ``start()`` alone and restored however it
+    exits: ``start()`` builds the query over a clone of the session,
+    and the micro-batch loop reads both values from that clone, so
+    later changes to the session do not reach the running query."""
+    confs = {}
+    if family is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_width(spark, family))
+    if not no_data_batches:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    with scoped_conf(spark, confs):
+        q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination()
+    return q
+
+
 def run_stream_to_memory(
     result: DataFrame,
     output_mode: str = "complete",
-    state_partitions: int | None = None,
+    family: str = "aggregate",
     available_now: bool = True,
     expect_single_batch: bool = False,
     no_data_batches: bool = True,
 ) -> DataFrame:
     """Execute a streaming plan to completion against the memory sink
-    (synchronous: availableNow trigger + processAllAvailable) and
-    return the materialized result as a batch DataFrame.
-
-    ``state_partitions`` narrows ``spark.sql.shuffle.partitions`` for
-    the duration of the stream start — a streaming query pins its
-    state-partition count at first start, and a stream-stream join
-    opens FOUR state stores per partition, so the right width is set
-    by state SIZE, not by the session's batch-shuffle default (on a
-    cluster you'd size it once per checkpoint; here each run is a
-    fresh checkpoint).
+    (synchronous, through ``run_stream``) and return the materialized
+    result as a batch DataFrame. ``family`` sets the state width.
 
     ``available_now=False`` falls back to the default micro-batch
     trigger: an availableNow run snapshots ``latestOffset`` ONCE at
@@ -188,15 +170,15 @@ def run_stream_to_memory(
     fully.
 
     ``no_data_batches=False`` disables the trailing no-data
-    micro-batch for the duration of this query. ONLY legal for a
-    stream whose output is a pure function of its data batches — an
-    INNER stream-stream join emits exclusively on data arrival; the
-    final no-data batch exists to evict join state, which stopping at
-    exhaustion makes moot. NEVER set it on a stream whose no-data
-    batch EMITS (watermark-gated null padding on outer joins, expiry
-    timers, any append-mode aggregate flushed by the final watermark)
-    — those would silently lose their last rows. Result equality was
-    probed row-for-row against the default before adoption (r14).
+    micro-batch for this query. ONLY legal for a stream whose output
+    is a pure function of its data batches — an INNER stream-stream
+    join emits exclusively on data arrival; the final no-data batch
+    exists to evict join state, which stopping at exhaustion makes
+    moot. NEVER set it on a stream whose no-data batch EMITS
+    (watermark-gated null padding on outer joins, expiry timers, any
+    append-mode aggregate flushed by the final watermark) — those
+    would silently lose their last rows. Result equality was probed
+    row-for-row against the default before adoption.
 
     ``expect_single_batch=True`` asserts, from the query's progress
     log, that ALL input rows arrived in ONE micro-batch. The
@@ -223,47 +205,19 @@ def run_stream_to_memory(
     # whose session has been collected are pruned — their views died
     # with the session.
     _retire_sink_views(spark, name)
-    if state_partitions is None:
-        state_partitions = DEFAULT_STATE_PARTITIONS
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    nd_conf = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_nd = spark.conf.get(nd_conf, "true")
-    if not no_data_batches:
-        spark.conf.set(nd_conf, "false")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        writer = (
-            result.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try:
-        q.processAllAvailable()
-        if expect_single_batch:
-            data_batches = [
-                p for p in q.recentProgress if _input_rows(p) > 0
-            ]
-            if len(data_batches) > 1:
-                raise AssertionError(
-                    f"watermark-sensitive stream expected ONE data "
-                    f"micro-batch, got {len(data_batches)} — the source "
-                    f"fixture no longer delivers in a single batch, so "
-                    f"the initial-zero-watermark oracle premise is void"
-                )
-    finally:
-        q.stop()
-        q.awaitTermination()
-        # restored only after the run: unlike the state width (pinned
-        # at first start), this conf is consulted per trigger
-        if not no_data_batches:
-            spark.conf.set(nd_conf, prev_nd)
+    writer = result.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    q = run_stream(spark, writer, family, no_data_batches)
+    if expect_single_batch:
+        data_batches = [p for p in q.recentProgress if _input_rows(p) > 0]
+        if len(data_batches) > 1:
+            raise AssertionError(
+                f"watermark-sensitive stream expected ONE data "
+                f"micro-batch, got {len(data_batches)} — the source "
+                f"fixture no longer delivers in a single batch, so "
+                f"the initial-zero-watermark oracle premise is void"
+            )
     return spark.table(name)
 
 

@@ -28,6 +28,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from oracle_to_cassandra_spark.streaming.core import run_stream
+
 
 def idempotent_batch_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
     """A foreachBatch callback writing each micro-batch under
@@ -47,7 +49,7 @@ def run_resumable_ingest(
     checkpoint_dir: str,
     on_batch: Callable[[DataFrame, int], None] | None = None,
     output_mode: str = "append",
-    state_partitions: int | None = None,
+    family: str | None = None,
 ) -> None:
     """Run a streaming ingest to exhaustion (availableNow) through the
     idempotent batch writer. Batch granularity is the SOURCE's concern
@@ -59,10 +61,9 @@ def run_resumable_ingest(
 
     ``output_mode="update"`` serves stateful sources whose foreachBatch
     frame carries per-key updated rows (the typed-state resume query);
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    stream's FIRST start only — a streaming query fixes its
-    state-partition count in the checkpoint, so the width must be set
-    by state size, not the session's batch-shuffle default."""
+    ``family`` names their operators for the state width, which only
+    the FIRST start sets — a resumed query reads its width back from
+    the checkpoint."""
     writer = idempotent_batch_writer(out_dir)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
@@ -78,22 +79,11 @@ def run_resumable_ingest(
         finally:
             batch_df.unpersist()
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            source.writeStream.outputMode(output_mode)
-            .foreachBatch(_write)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    run_stream(
+        spark,
+        source.writeStream.outputMode(output_mode)
+        .foreachBatch(_write)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint_dir),
+        family,
+    )

@@ -233,6 +233,9 @@ def test_global_aggregate_attach_is_bounded(spark):
         if bad:
             violations[name] = bad
     assert not violations, f"unbounded condition-less joins: {violations}"
+
+
+def test_hll_union_rollup_single_branch(spark):
     """The sketch rollup must aggregate customer ONCE and derive the
     grand total from unioned segment sketches — a detail∪total union
     of two branches re-executes the scan+agg (no CSE across plan
@@ -285,15 +288,10 @@ def test_runtime_bloom_filter_injected(spark):
         _BLOOM_CONFS,
         _bloom_join_plan,
     )
+    from oracle_to_cassandra_spark.session import scoped_conf
 
-    prev = {k: spark.conf.get(k) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, _BLOOM_CONFS):
         plan = formatted_plan(_bloom_join_plan(spark, SF_DIR))
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
     assert "might_contain" in plan.lower(), "no runtime bloom filter in plan"
 
 

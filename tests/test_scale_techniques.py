@@ -14,6 +14,7 @@ from oracle_to_cassandra_spark.operators.scale import (
     write_bucketed_table,
 )
 from oracle_to_cassandra_spark.plans.explain import formatted_plan
+from oracle_to_cassandra_spark.session import scoped_conf
 from oracle_to_cassandra_spark.sources import load_table
 from tests.conftest import SF_DIR
 
@@ -29,24 +30,23 @@ def test_bucketed_join_has_no_exchange(spark):
     write_bucketed_table(li, "b_lineitem", "o_orderkey", 8)
     # disable broadcast so the co-location (not a broadcast) is what
     # eliminates the exchange
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
-        plan = formatted_plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join still shuffles:\n" + plan
-        # and it's correct
-        expected = (
-            load_table(spark, SF_DIR, "lineitem")
-            .join(
-                load_table(spark, SF_DIR, "orders"),
-                F.col("l_orderkey") == F.col("o_orderkey"),
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            joined = bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
+            plan = formatted_plan(joined)
+            assert "SortMergeJoin" in plan
+            assert "Exchange" not in plan, "bucketed join still shuffles:\n" + plan
+            # and it's correct
+            expected = (
+                load_table(spark, SF_DIR, "lineitem")
+                .join(
+                    load_table(spark, SF_DIR, "orders"),
+                    F.col("l_orderkey") == F.col("o_orderkey"),
+                )
+                .count()
             )
-            .count()
-        )
-        assert joined.count() == expected
+            assert joined.count() == expected
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.sql("DROP TABLE IF EXISTS b_orders")
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 

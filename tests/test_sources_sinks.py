@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,8 +63,15 @@ def test_sink_rejects_schema_mismatch(spark):
 
 def test_sink_partition_layout_and_pruned_readback(spark):
     path = os.path.join(SCRATCH, "orders_by_status")
-    orders = load_table(spark, SF_DIR, "orders").select(
-        "o_orderkey", "o_orderstatus", "o_custkey"
+    # scrambled and materialized, so the clustering order cannot come
+    # from the fixture's own row order (the orders file is stored by
+    # key) and the optimizer cannot drop the scramble under the sink's
+    # repartition
+    orders = (
+        load_table(spark, SF_DIR, "orders")
+        .select("o_orderkey", "o_orderstatus", "o_custkey")
+        .orderBy(F.xxhash64("o_orderkey"))
+        .localCheckpoint()
     )
     write_query_table(
         orders, path, partition_by=["o_orderstatus"], cluster_by=["o_orderkey"]
@@ -76,6 +84,18 @@ def test_sink_partition_layout_and_pruned_readback(spark):
     got = read_partition(spark, path, "o_orderstatus", status).count()
     want = orders.filter(F.col("o_orderstatus") == status).count()
     assert got == want
+    # every written file keeps the clustering order (the Cassandra
+    # clustering-column analog), not just the partition grouping
+    keys = [
+        pq.read_table(os.path.join(d, f), columns=["o_orderkey"])
+        .column("o_orderkey").to_pylist()
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+    assert sum(len(k) > 1 for k in keys) >= 2, "too few rows to show an order"
+    unsorted = [k[:5] for k in keys if k != sorted(k)]
+    assert not unsorted, f"{len(unsorted)} of {len(keys)} files out of o_orderkey order"
 
 
 def test_register_views_exposes_sql(spark):
